@@ -14,16 +14,12 @@ import graft.queries.Dedup
   *
   * The index is three plain DataFrames (persistable as tables, no custom
   * format):
-  *   - `bands`:   (doc_id, band_idx, h) — LSH band-bucket rows,
-  *   - `hashes`:  (doc_id, h) — distinct shingle hashes for Jaccard verify,
-  *   - `buckets`: (band_idx, h, n) — per-bucket band-row counts, maintained
-  *     ADDITIVELY (old counts + batch counts = counts of the union, by
-  *     construction), so the hot-bucket cap reads a count table instead of
-  *     re-aggregating the corpus band rows per probe,
+  *   - `bands`:  (doc_id, band_idx, h) — LSH band-bucket rows,
+  *   - `hashes`: (doc_id, h) — distinct shingle hashes for Jaccard verify,
+  *   - `counts`: (doc_id, n_tok) — per-doc distinct-hash counts,
   * built by the same kernels as the batch path (one hash contract
   * end-to-end, so batch-mode results and incremental results agree
-  * exactly — see Dedup.lshCandidates / q_jaccard_pairs). `counts`
-  * (doc_id, n_tok) rides along as the intake ledger (doc identity).
+  * exactly — see Dedup.lshCandidates / q_jaccard_pairs).
   *
   * Matching applies the same hot-bucket cap as the batch path, over the
   * COMBINED (index ∪ batch) bucket population: a bucket that went
@@ -33,22 +29,17 @@ import graft.queries.Dedup
 object IncrementalDedup {
 
   /** Persistable index state for a corpus slice.
-    * @param bands   (doc_id, band_idx, h) — LSH band-bucket rows
-    * @param hashes  (doc_id, h) distinct shingle hashes
-    * @param counts  (doc_id, n_tok) distinct-hash count per doc — stored at
-    *                build time so the match path never re-aggregates the
-    *                corpus hash table
-    * @param buckets (band_idx, h, n) per-bucket band-row counts — stored at
-    *                build time so the hot-bucket cap never re-aggregates
-    *                the corpus band table (counts are additive across
-    *                disjoint slices: old n + batch n = combined n)
+    * @param bands  (doc_id, band_idx, h)
+    * @param hashes (doc_id, h) distinct shingle hashes
+    * @param counts (doc_id, n_tok) distinct-hash count per doc — stored at
+    *               build time so the match path never re-aggregates the
+    *               corpus hash table
     */
   final case class DedupIndex(bands: DataFrame, hashes: DataFrame,
-      counts: DataFrame, buckets: DataFrame)
+      counts: DataFrame)
 
   /** Build index rows from (doc_id, tokens array<string>) — a narrow map
-    * (signature kernel) plus one explode; the only shuffle is the (small)
-    * per-bucket count aggregate.
+    * (signature kernel) plus one explode; no joins, no shuffle.
     */
   def buildIndex(docsWithTokens: DataFrame): DedupIndex = {
     val sigWide = docsWithTokens
@@ -67,96 +58,68 @@ object IncrementalDedup {
       .select(col("doc_id"), Dedup.baseHashPublic(col("token")).as("h"))
       .distinct()
     val counts = hashes.groupBy("doc_id").agg(count(lit(1)).as("n_tok"))
-    val buckets = bucketCounts(bands)
-    DedupIndex(bands, hashes, counts, buckets)
+    DedupIndex(bands, hashes, counts)
   }
-
-  /** Per-bucket band-row counts for a band table — the additive summary
-    * [[newPairs]] reads instead of the band rows. Exposed so a reader of a
-    * legacy persisted index (no stored bucket table) can derive one.
-    */
-  def bucketCounts(bands: DataFrame): DataFrame =
-    bands.groupBy("band_idx", "h").agg(count(lit(1)).as("n"))
 
   /** Near-dup pairs INVOLVING the batch: (id_a, id_b, jaccard) with
     * id_a < id_b, at least one side from `batch`, jaccard > `threshold`
     * (`threshold` must be positive — pairs are admitted strictly above it).
-    *
-    * Per-batch cost is O(batch + touched buckets + candidate hash rows):
-    *   - the hot-bucket cap sums the stored COUNT tables (guide §2.3
-    *     "shuffle fewer bytes": the index side is semi-join-restricted to
-    *     the buckets the batch touches — an untouched bucket has no batch
-    *     rows to join, so its hotness cannot affect the output — and the
-    *     corpus band table is never re-aggregated);
-    *   - ONE candidate join (guide §2.4): the old∪new band rows, tagged,
-    *     join the new rows once — the former oldVsNew/newVsNew pair paid
-    *     two joins over the same shuffled data;
-    *   - the Jaccard verify computes |A∩B| and |A∪B| in ONE tagged union
-    *     aggregate (n_a + n_b − n_common ≡ |A∪B| by inclusion-exclusion,
-    *     same integers, same rounded doubles) — the former two corpus-
-    *     sized `counts` joins per batch are gone.
+    * Old-vs-old pairs are never generated.
     */
   def newPairs(index: DedupIndex, batch: DedupIndex,
       threshold: Double = 0.3,
       maxBucketSize: Int = Dedup.MaxBucketSize): DataFrame = {
+    require(threshold > 0, s"threshold must be positive, got $threshold")
     // combined per-bucket population decides hotness (same cap semantics
-    // as the one-shot batch path run over the grown corpus): stored index
-    // counts + batch counts, restricted to buckets the batch touches
-    val touched = batch.buckets
-    val hot = index.buckets
-      .join(touched.select("band_idx", "h"), Seq("band_idx", "h"), "left_semi")
-      .unionByName(touched)
-      .groupBy("band_idx", "h").agg(sum(col("n")).as("bsz"))
+    // as the one-shot batch path run over the grown corpus)
+    val hot = index.bands.unionByName(batch.bands).groupBy("band_idx", "h")
+      .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") > maxBucketSize)
       .select("band_idx", "h")
-
-    // ONE candidate join: (old ∪ new, tagged) ⋈ new on the bucket key.
-    // old-vs-new joins ONE orientation (old ⋈ new), so the pair must be
-    // canonicalized with least/greatest — an `id_l < id_r` filter there
-    // would silently drop every pair whose indexed doc id exceeds the
-    // batch doc id (doc ids carry no arrival-order contract). new-vs-new
-    // is a symmetric self-join producing both orientations, so the
-    // ordering filter is the correct dedup there. Both sides anti-join the
-    // (broadcast) hot-bucket blacklist, exactly as before.
+    // the cap filters the BATCH side only: both joins match on the bucket
+    // key, so a hot bucket without batch rows yields no pair. It also keeps
+    // `hot` to two references — AQE does not reuse its exchange across
+    // references, so each one re-aggregates the band rows.
     val newB = batch.bands.join(broadcast(hot), Seq("band_idx", "h"), "left_anti")
-    val leftB = index.bands
-      .select(col("band_idx"), col("h"), col("doc_id").as("id_l"),
-        lit(true).as("is_old"))
-      .unionByName(batch.bands
-        .select(col("band_idx"), col("h"), col("doc_id").as("id_l"),
-          lit(false).as("is_old")))
-      .join(broadcast(hot), Seq("band_idx", "h"), "left_anti")
-    val cand = leftB
-      .join(newB.select(col("band_idx"), col("h"), col("doc_id").as("id_r")),
-        Seq("band_idx", "h"))
-      .filter((col("is_old") && col("id_l") =!= col("id_r")) ||
-        (!col("is_old") && col("id_l") < col("id_r")))
-      .select(least(col("id_l"), col("id_r")).as("id_a"),
-        greatest(col("id_l"), col("id_r")).as("id_b"))
-      .distinct()
 
-    // Jaccard verify over candidate ids only: per-doc hash sets are
-    // distinct by construction, so a (pair, h) group holds the hash's
-    // side-membership and ONE aggregate pass yields both |A∩B| and |A∪B|
-    // — no per-doc counts join, no corpus re-aggregation
+    // old-vs-new joins ONE orientation (old ⋈ new), so the pair must be
+    // canonicalized with least/greatest — a `id_a < id_b` filter here would
+    // silently drop every pair whose indexed doc id exceeds the batch doc id
+    // (doc ids carry no arrival-order contract). new-vs-new joins the batch
+    // with itself and produces both orientations, so the ordering filter is
+    // the correct dedup there.
+    val oldVsNew = index.bands
+      .select(col("band_idx"), col("h"), col("doc_id").as("old_id"))
+      .join(newB.select(col("band_idx"), col("h"), col("doc_id").as("new_id")),
+        Seq("band_idx", "h"))
+      .filter(col("old_id") =!= col("new_id"))
+      .select(least(col("old_id"), col("new_id")).as("id_a"),
+        greatest(col("old_id"), col("new_id")).as("id_b"))
+    val newVsNew = newB.select(col("band_idx"), col("h"), col("doc_id").as("id_a"))
+      .join(batch.bands.select(col("band_idx"), col("h"), col("doc_id").as("id_b")),
+        Seq("band_idx", "h"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+    val cand = oldVsNew.unionByName(newVsNew).distinct()
+
+    // Jaccard verify over candidate ids only, same shape as the batch
+    // verify stage (hash-set intersection on 8-byte keys); per-doc counts
+    // come from index state, never a corpus re-aggregation
     val hashes = index.hashes.unionByName(batch.hashes)
-    val aRows = cand
-      .join(hashes.select(col("doc_id").as("id_a"), col("h")), "id_a")
-      .select(col("id_a"), col("id_b"), col("h"),
-        lit(1L).as("in_a"), lit(0L).as("in_b"))
-    val bRows = cand
-      .join(hashes.select(col("doc_id").as("id_b"), col("h")), "id_b")
-      .select(col("id_a"), col("id_b"), col("h"),
-        lit(0L).as("in_a"), lit(1L).as("in_b"))
-    aRows.unionByName(bRows)
-      .groupBy("id_a", "id_b", "h")
-      .agg(max(col("in_a")).as("in_a"), max(col("in_b")).as("in_b"))
-      .groupBy("id_a", "id_b")
-      .agg(sum(col("in_a") * col("in_b")).as("n_common"),
-        count(lit(1)).as("n_union"))
+    val counts = index.counts.unionByName(batch.counts)
+    val a = hashes.select(col("doc_id").as("id_a"), col("h"))
+    val b = hashes.select(col("doc_id").as("id_b"), col("h"))
+    val common = cand.join(a, "id_a").join(b, Seq("id_b", "h"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
+    common
+      .join(counts.withColumnRenamed("doc_id", "id_a")
+        .withColumnRenamed("n_tok", "n_a"), "id_a")
+      .join(counts.withColumnRenamed("doc_id", "id_b")
+        .withColumnRenamed("n_tok", "n_b"), "id_b")
       .select(col("id_a"), col("id_b"),
         round(col("n_common").cast("double") /
-          col("n_union").cast("double"), 6).as("jaccard"))
+          (col("n_a") + col("n_b") - col("n_common")).cast("double"), 6)
+          .as("jaccard"))
       .filter(col("jaccard") > threshold)
   }
 }

@@ -538,8 +538,8 @@ object Dedup {
       val index = IncrementalDedup.buildIndex(arrays.filter(col("doc_id") < cutoff))
       val batch = IncrementalDedup.buildIndex(arrays.filter(col("doc_id") >= cutoff))
       graft.StageCache.roll("q_incremental_dedup", arrays,
-        index.bands, index.hashes, index.counts, index.buckets,
-        batch.bands, batch.hashes, batch.counts, batch.buckets)
+        index.bands, index.hashes, index.counts,
+        batch.bands, batch.hashes, batch.counts)
       IncrementalDedup.newPairs(index, batch).orderBy("id_a", "id_b")
     },
     Some(s"""WITH cand0 AS ($lshCandidatesSql),

@@ -38,7 +38,8 @@ object DedupIndexStream {
     */
   def start(spark: SparkSession, docs: DataFrame, indexDir: String,
       pairsDir: String, checkpointDir: String,
-      threshold: Double = 0.3): StreamingQuery =
+      threshold: Double = 0.3): StreamingQuery = {
+    require(threshold > 0, s"threshold must be positive, got $threshold")
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(0L))
@@ -46,6 +47,7 @@ object DedupIndexStream {
         applyBatch(spark, batchDf, indexDir, pairsDir, threshold, s"b$batchId")
       }
       .start()
+  }
 
   /** One micro-batch: dedupe against the ledger, probe, write pairs,
     * extend the index, commit. Exposed for AvailableNow-style catch-up
@@ -125,14 +127,14 @@ object DedupIndexStream {
         case None => deduped
       }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val batchIdx = IncrementalDedup.buildIndex(fresh)
-      // cache the (small) batch index once: pairs + four writes read it
+      // cache the (small) batch index once: pairs + three writes read it
       batchIdx.bands.persist(); batchIdx.hashes.persist()
-      batchIdx.counts.persist(); batchIdx.buckets.persist()
+      batchIdx.counts.persist()
       try {
         // nothing fresh: no state to commit, replay re-derives the same
         if (timed(s"dse($batchKey) counts.isEmpty")(batchIdx.counts.isEmpty))
           return
-        val idx = existing.getOrElse(emptyIndex(spark, batchIdx))
+        val idx = existing.getOrElse(emptyIndex(batchIdx))
         val pairs = IncrementalDedup.newPairs(idx, batchIdx, threshold)
         pairs.persist()
         try {
@@ -147,10 +149,6 @@ object DedupIndexStream {
           batchIdx.hashes.write.parquet(s"$batchDir/hashes"))
         timed(s"dse($batchKey) counts.write")(
           batchIdx.counts.write.parquet(s"$batchDir/counts"))
-        // the batch's own per-bucket counts: the additive summary the next
-        // batch's hot-bucket cap reads instead of the corpus band rows
-        timed(s"dse($batchKey) buckets.write")(
-          batchIdx.buckets.write.parquet(s"$batchDir/buckets"))
         // the commit point; the marker records the batch's content
         // fingerprint so a post-compaction replay is distinguishable from
         // a reset checkpoint reusing the key name
@@ -159,7 +157,7 @@ object DedupIndexStream {
         ()
       } finally {
         batchIdx.bands.unpersist(); batchIdx.hashes.unpersist()
-        batchIdx.counts.unpersist(); batchIdx.buckets.unpersist(): Unit
+        batchIdx.counts.unpersist(): Unit
         fresh.unpersist(): Unit
       }
       } finally deduped.unpersist(): Unit
@@ -170,37 +168,19 @@ object DedupIndexStream {
     * (crashed mid-write) batches are invisible. Batch count grows with
     * stream lifetime — [[compactIndex]] merges it back to one directory
     * (metadata-only concern; the per-batch probe never scans old×old
-    * regardless).
+    * regardless). Only `bands`, `hashes` and `counts` are read: any other
+    * subdir an older writer left in a batch dir is ignored, and the next
+    * compaction drops it.
     */
   def loadIndex(spark: SparkSession, indexDir: String): Option[DedupIndex] = {
     val base = Paths.get(indexDir, "batches")
     if (!Files.isDirectory(base)) return None
     val committed = committedDirs(base).map(_.toString)
     if (committed.isEmpty) None
-    else {
-      // per-bucket count summaries (additive: the union of per-batch count
-      // tables sums to the combined population's counts). A batch dir
-      // written before the bucket table existed derives its summary from
-      // its own band rows — a one-off legacy read, gone after the next
-      // compaction rewrites the dir with a stored bucket table.
-      val (withB, legacy) = committed.partition(d =>
-        Files.isDirectory(Paths.get(d, "buckets")))
-      val stored = if (withB.isEmpty) None
-      else Some(spark.read.parquet(withB.map(_ + "/buckets"): _*))
-      val derived = if (legacy.isEmpty) None
-      else Some(IncrementalDedup.bucketCounts(
-        spark.read.parquet(legacy.map(_ + "/bands"): _*)))
-      val buckets = (stored, derived) match {
-        case (Some(s0), Some(d0)) => s0.unionByName(d0)
-        case (Some(s0), None) => s0
-        case (None, d0) => d0.get
-      }
-      Some(DedupIndex(
-        spark.read.parquet(committed.map(_ + "/bands"): _*),
-        spark.read.parquet(committed.map(_ + "/hashes"): _*),
-        spark.read.parquet(committed.map(_ + "/counts"): _*),
-        buckets))
-    }
+    else Some(DedupIndex(
+      spark.read.parquet(committed.map(_ + "/bands"): _*),
+      spark.read.parquet(committed.map(_ + "/hashes"): _*),
+      spark.read.parquet(committed.map(_ + "/counts"): _*)))
   }
 
   /** All detected pairs so far: (id_a, id_b, jaccard, batch). */
@@ -257,14 +237,6 @@ object DedupIndexStream {
     idx.bands.repartition(parts("bands")).write.parquet(s"$target/bands")
     idx.hashes.repartition(parts("hashes")).write.parquet(s"$target/hashes")
     idx.counts.repartition(parts("counts")).write.parquet(s"$target/counts")
-    // fold the per-batch bucket summaries into one row per bucket (counts
-    // are additive); sized by the BANDS bytes — the bucket table has no
-    // committed footprint of its own to size from, and one row per distinct
-    // bucket is bounded by the band rows
-    idx.buckets.groupBy("band_idx", "h")
-      .agg(org.apache.spark.sql.functions.sum(
-        org.apache.spark.sql.functions.col("n")).as("n"))
-      .repartition(parts("bands")).write.parquet(s"$target/buckets")
     // the supersede list makes the commit ATOMIC for readers: the instant
     // the marker lands, loadIndex serves the merged dir and EXCLUDES its
     // inputs even if their trees still exist — there is no window where
@@ -364,12 +336,11 @@ object DedupIndexStream {
       finally s.close()
     }
 
-  private def emptyIndex(spark: SparkSession, like: DedupIndex): DedupIndex =
+  private def emptyIndex(like: DedupIndex): DedupIndex =
     DedupIndex(
       like.bands.filter(org.apache.spark.sql.functions.lit(false)),
       like.hashes.filter(org.apache.spark.sql.functions.lit(false)),
-      like.counts.filter(org.apache.spark.sql.functions.lit(false)),
-      like.buckets.filter(org.apache.spark.sql.functions.lit(false)))
+      like.counts.filter(org.apache.spark.sql.functions.lit(false)))
 
   private def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {

@@ -69,6 +69,23 @@ class IncrementalDedupSpec extends SparkSpec {
       Seq((10L, 100L))
   }
 
+  test("a non-positive threshold fails loudly, at the probe and at stream submission") {
+    val ss = spark
+    import ss.implicits._
+    val idx = IncrementalDedup.buildIndex(
+      Seq((1L, Seq("a", "b", "c"))).toDF("doc_id", "tokens"))
+    an[IllegalArgumentException] should be thrownBy
+      IncrementalDedup.newPairs(idx, idx, threshold = 0.0)
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Seq[String])]
+    val dir = scratchDir("dedupthreshold").getAbsolutePath
+    an[IllegalArgumentException] should be thrownBy
+      graft.streaming.DedupIndexStream.start(spark,
+        in.toDF().toDF("doc_id", "tokens"), s"$dir/index", s"$dir/pairs",
+        s"$dir/ckpt", threshold = 0.0)
+  }
+
   test("index round-trips through parquet (persistable state)") {
     val cutoff = 400L
     val dir = scratchDir("dedupidx").getAbsolutePath
@@ -76,12 +93,10 @@ class IncrementalDedupSpec extends SparkSpec {
     built.bands.write.mode("overwrite").parquet(s"$dir/bands")
     built.hashes.write.mode("overwrite").parquet(s"$dir/hashes")
     built.counts.write.mode("overwrite").parquet(s"$dir/counts")
-    built.buckets.write.mode("overwrite").parquet(s"$dir/buckets")
     val reloaded = IncrementalDedup.DedupIndex(
       spark.read.parquet(s"$dir/bands"),
       spark.read.parquet(s"$dir/hashes"),
-      spark.read.parquet(s"$dir/counts"),
-      spark.read.parquet(s"$dir/buckets"))
+      spark.read.parquet(s"$dir/counts"))
     val batch = IncrementalDedup.buildIndex(arrays.filter(col("doc_id") >= cutoff))
     val a = IncrementalDedup.newPairs(built, batch).select("id_a", "id_b")
     val b = IncrementalDedup.newPairs(reloaded, batch).select("id_a", "id_b")

@@ -159,7 +159,7 @@ class DedupIndexStreamSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val dirs = Files.list(base).iterator().asScala.toList
     dirs.size shouldBe 1 // originals retired
-    for (sub <- Seq("bands", "hashes", "counts", "buckets")) {
+    for (sub <- Seq("bands", "hashes", "counts")) {
       val parts = Files.list(dirs.head.resolve(sub)).iterator().asScala
         .count(_.getFileName.toString.endsWith(".parquet"))
       withClue(s"$sub part files:") { parts should be > 1 }
@@ -182,49 +182,31 @@ class DedupIndexStreamSpec extends SparkSpec {
       Seq(0L, 10L, 20L, 30L, 99L)
   }
 
-  test("stored bucket table is the band-row aggregate, additively, across batches and compaction") {
-    val dir = scratchDir("dedupbuckets").getAbsolutePath
-    // three batches share tokens so buckets accumulate across batches
-    for (b <- 0 until 3)
-      DedupIndexStream.applyBatch(spark,
-        Seq((b * 7L, toks(0 until 30, "shared"))).toDF("doc_id", "tokens"),
-        s"$dir/index", s"$dir/pairs", 0.3, s"b$b")
-    def check(): Unit = {
-      val idx = DedupIndexStream.loadIndex(spark, s"$dir/index").get
-      val summed = idx.buckets.groupBy("band_idx", "h")
-        .agg(sum("n").as("n"))
-      val fromBands = graft.operators.IncrementalDedup.bucketCounts(idx.bands)
-      summed.except(fromBands).count() shouldBe 0
-      fromBands.except(summed).count() shouldBe 0
-    }
-    check()
-    // compaction folds the per-batch summaries into one row per bucket
-    DedupIndexStream.compactIndex(spark, s"$dir/index") shouldBe 3
-    check()
-    val compacted = DedupIndexStream.loadIndex(spark, s"$dir/index").get
-    compacted.buckets.groupBy("band_idx", "h").count()
-      .filter(col("count") > 1).count() shouldBe 0
-  }
-
-  test("legacy batch dirs without a stored bucket table still load and probe") {
-    val dir = scratchDir("deduplegacy").getAbsolutePath
+  test("batch dirs with an extra buckets/ table still load, probe, and compact to three tables") {
+    val dir = scratchDir("dedupbucketsdir").getAbsolutePath
     DedupIndexStream.applyBatch(spark,
-      Seq((1L, toks(0 until 30, "lg"))).toDF("doc_id", "tokens"),
+      Seq((1L, toks(0 until 30, "bk"))).toDF("doc_id", "tokens"),
       s"$dir/index", s"$dir/pairs", 0.3, "b0")
-    // simulate an index written before the bucket table existed
-    val bdir = Paths.get(s"$dir/index/batches/b0/buckets")
-    import scala.jdk.CollectionConverters._
-    Files.walk(bdir).iterator().asScala.toList.reverse.foreach(Files.delete)
-    // loads (bucket summary derived from the legacy dir's band rows)...
-    val idx = DedupIndexStream.loadIndex(spark, s"$dir/index").get
-    idx.buckets.agg(sum("n")).head().getLong(0) shouldBe
-      idx.bands.count()
-    // ...and the probe against it still detects cross-batch near-dups
+    // the per-bucket count table earlier writers stored beside the others
+    val b0 = s"$dir/index/batches/b0"
+    spark.read.parquet(s"$b0/bands").groupBy("band_idx", "h")
+      .agg(count(lit(1)).as("n")).write.parquet(s"$b0/buckets")
+    DedupIndexStream.loadIndex(spark, s"$dir/index").get
+      .counts.select("doc_id").as[Long].collect().toSeq shouldBe Seq(1L)
     DedupIndexStream.applyBatch(spark,
-      Seq((2L, toks(0 until 30, "lg"))).toDF("doc_id", "tokens"),
+      Seq((2L, toks(0 until 30, "bk"))).toDF("doc_id", "tokens"),
       s"$dir/index", s"$dir/pairs", 0.3, "b1")
     DedupIndexStream.loadPairs(spark, s"$dir/pairs")
       .filter(col("id_a") === 1L && col("id_b") === 2L).count() shouldBe 1
+    Files.exists(Paths.get(s"$dir/index/batches/b1/buckets")) shouldBe false
+    DedupIndexStream.compactIndex(spark, s"$dir/index") shouldBe 2
+    import scala.jdk.CollectionConverters._
+    val dirs = Files.list(Paths.get(s"$dir/index", "batches"))
+      .iterator().asScala.toList
+    dirs.size shouldBe 1
+    Files.list(dirs.head).iterator().asScala.filter(Files.isDirectory(_))
+      .map(_.getFileName.toString).toList.sorted shouldBe
+      Seq("bands", "counts", "hashes")
   }
 
   test("compactIndex crash windows: before-marker keeps originals; after-marker excludes them") {
