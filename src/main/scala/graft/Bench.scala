@@ -245,7 +245,7 @@ object Bench {
     // first-run compilation.
     sys.env.get("SPARK_GRAFT_WARMUP").orElse(Some("/root/testdata/sf0.001"))
       .filter(_ != "off").foreach { wdir =>
-        selected.foreach { case (name, fn) =>
+        selected.foreach { case (_, fn) =>
           try fn(spark, wdir).count()
           catch { case _: Throwable => }
         }

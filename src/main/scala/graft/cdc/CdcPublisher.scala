@@ -33,7 +33,7 @@ final class CdcPublisher(bus: EventBus, maxChunkBytes: Int = 255 * 1024) {
     def flush(): Unit = if (buf.length > 1) {
       buf.append("]")
       chunks += 1
-      bus.publish(bus.Notification(
+      bus.publish(EventBus.Notification(
         dataset = s"$db.$sch.$tbl",
         pipelineToken = "", destination = "cdc",
         database = db, table = tbl,

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** One change event, normalized across CDC sources (reference

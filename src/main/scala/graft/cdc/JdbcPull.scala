@@ -4,7 +4,7 @@ import graft.model.{JdbcSourceSpec, SecretRef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.time.ZonedDateTime
 import scala.jdk.CollectionConverters._
 

@@ -116,7 +116,7 @@ object DataQualityRunner {
   /** Apply the failure policy to a violation set; returns (errors, warnings)
     * actually counted (errors capped at 101 by the early abort).
     */
-  def enforce(violations: DataFrame, datasetName: String): (Long, Long) = {
+  def enforce(violations: DataFrame): (Long, Long) = {
     val errors = violations.filter(col("is_error")).limit(101).count()
     if (errors > 100)
       throw new DataQualityException(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Paths
 
 import graft.model.{ObjectStoreSpec, PipelineSpecException}
 import graft.sinks.{ObjectStoreSink, TableManifest}

@@ -413,16 +413,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       case _ => delegate.parsePlan(sqlText)
     }
 
-  /** Three-valued graft-table probe. Foreign only on PROOF: the name is a
-    * temp view (Spark's plain verbs resolve it first), the table/database
-    * does not exist, the entry is a VIEW, or the layout provably isn't the
-    * versioned protocol. Probe trouble is its own state — never foreign.
-    */
-  private sealed trait ProbeResult
-  private case object ProbeOurs extends ProbeResult
-  private case object ProbeForeign extends ProbeResult
-  private final case class ProbeUnknown(e: Exception) extends ProbeResult
-
   private def probe(s: SparkSession, db: Option[String],
       table: String): ProbeResult =
     try {
@@ -508,6 +498,16 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 }
 
 object GraftSqlParser {
+
+  /** Three-valued graft-table probe. Foreign only on PROOF: the name is a
+    * temp view (Spark's plain verbs resolve it first), the table/database
+    * does not exist, the entry is a VIEW, or the layout provably isn't the
+    * versioned protocol. Probe trouble is its own state — never foreign.
+    */
+  private sealed trait ProbeResult
+  private case object ProbeOurs extends ProbeResult
+  private case object ProbeForeign extends ProbeResult
+  private final case class ProbeUnknown(e: Exception) extends ProbeResult
 
   // strict shapes only — anything else falls through to Spark. Identifiers
   // are plain (no backticks): the protocol's own database/table naming.
@@ -663,7 +663,7 @@ object GraftSqlParser {
     * no manifest or no usable condition shape — the caller degrades to
     * the full rewrite.
     */
-  private def cowSplit(spark: SparkSession, df: org.apache.spark.sql.DataFrame,
+  private def cowSplit(df: org.apache.spark.sql.DataFrame,
       snap: ObjectStoreSink.Snapshot, cond: org.apache.spark.sql.Column)
       : Option[(Seq[TableManifest.FileEntry], Seq[TableManifest.FileEntry])] =
     try {
@@ -729,6 +729,7 @@ object GraftSqlParser {
         case (true, None) | (true, Some("TARGET")) => "not_target"
         case (true, Some("SOURCE")) => "not_source"
         case (false, Some(b)) => fail(s"WHEN MATCHED BY $b is not a clause")
+        case (true, Some(b)) => fail(s"WHEN NOT MATCHED BY $b is not a clause")
       }
       RawWhen(kind, Option(m.group(3)).map(_.trim), m.group(4).trim)
     }
@@ -1138,7 +1139,7 @@ object GraftSqlParser {
           0
         case Some(w) =>
           val keep = not(coalesce(expr(w), lit(false)))
-          cowSplit(spark, df, snap, expr(w)) match {
+          cowSplit(df, snap, expr(w)) match {
             case Some((touched, clean)) if clean.nonEmpty =>
               val touchedDf = ObjectStoreSink.readSubset(spark, snap.path,
                 spec.fileFormat, touched, touched.size + clean.size)
@@ -1220,7 +1221,7 @@ object GraftSqlParser {
       val (nUpdated, linked) =
         try {
           val (rep, fallbackCount) =
-            whereText.flatMap(w => cowSplit(spark, df, snap, expr(w))) match {
+            whereText.flatMap(w => cowSplit(df, snap, expr(w))) match {
               case Some((touched, clean)) if clean.nonEmpty =>
                 val touchedDf = ObjectStoreSink.readSubset(spark, snap.path,
                   spec.fileFormat, touched, touched.size + clean.size)

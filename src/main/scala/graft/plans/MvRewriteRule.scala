@@ -368,7 +368,7 @@ object MvRewriteRule extends Rule[LogicalPlan] {
             case (Alias(a: AttributeReference, _), tgt) =>
               val k = findOut(isKeyOut(a)).getOrElse(return None)
               Alias(k, tgt.name)(exprId = tgt.exprId)
-            case (e @ Alias(ae: AggregateExpression, _), tgt)
+            case (Alias(ae: AggregateExpression, _), tgt)
                 if !ae.isDistinct && ae.filter.isEmpty =>
               val re = reAgg(ae.aggregateFunction).getOrElse(return None)
               if (re.dataType != tgt.dataType) return None // no type drift

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.{Multimodal => MM}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Encoders, Row}
 import org.apache.spark.sql.types._
 
 /** Multimodal-column coverage: binary media payloads flowing through the

@@ -164,7 +164,7 @@ object OpsQueries {
         }
         nations.foreach { r =>
           val k = r.getInt(0); val name = r.getString(1); val reg = r.getInt(2)
-          bus.publish(bus.Notification(
+          bus.publish(EventBus.Notification(
             dataset = name.toLowerCase, pipelineToken = s"tok$k",
             destination = if (k % 2 == 0) "objectStore" else "database",
             database = "graft", table = name, location = s"/lake/$name",

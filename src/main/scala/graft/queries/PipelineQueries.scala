@@ -5,7 +5,6 @@ import graft.runtime.Pipeline
 import graft.dq.DataQualityRunner
 import graft.sinks.JdbcSink
 import graft.sources.FileSources
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Oracle-checked queries over the PIPELINE ENGINE itself (the round-2
@@ -611,7 +610,7 @@ object PipelineQueries {
           val raw = FileSources.read(s, spec, BigCsv)
           try {
             val (_, warnings) = DataQualityRunner.enforce(
-              DataQualityRunner.columnRuleViolations(raw, spec), spec.name)
+              DataQualityRunner.columnRuleViolations(raw, spec))
             ("ok", Some(warnings))
           } catch {
             case e: DataQualityRunner.DataQualityException =>

@@ -4,7 +4,6 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import QueryDef.dsumSql
 
 /** Text-analysis operators over the `documents` table — the training-data
   * pipeline surface (builder prompt: language-ID, quality scoring, token

@@ -9,15 +9,7 @@ import scala.collection.mutable
   * events — SNS subscription filter-policy semantics, in process.
   */
 final class EventBus(maxRetained: Int = 100000) {
-
-  final case class Notification(
-      dataset: String,
-      pipelineToken: String,
-      destination: String, // objectStore | database
-      database: String,
-      table: String,
-      location: String,
-      attributes: Map[String, String] = Map.empty)
+  import EventBus.Notification
 
   private val subscribers =
     mutable.ArrayBuffer.empty[(Map[String, String], Notification => Unit)]
@@ -49,4 +41,15 @@ final class EventBus(maxRetained: Int = 100000) {
   }
 
   def history: Seq[Notification] = synchronized { published.toVector }
+}
+
+object EventBus {
+  final case class Notification(
+      dataset: String,
+      pipelineToken: String,
+      destination: String, // objectStore | database
+      database: String,
+      table: String,
+      location: String,
+      attributes: Map[String, String] = Map.empty)
 }

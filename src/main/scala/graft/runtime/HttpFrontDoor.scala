@@ -277,7 +277,7 @@ final class HttpFrontDoor(
       }
     }
 
-  private def statusJson(r: Pipeline.status.StatusRow): String =
+  private def statusJson(r: StatusStore.StatusRow): String =
     s"""{"pipelineToken": ${jsonStr(r.pipelineToken)}, "dataset": ${jsonStr(r.dataset)}, """ +
       s""""processName": ${jsonStr(r.processName)}, "step": ${jsonStr(r.step)}, """ +
       s""""level": ${jsonStr(r.level)}, "message": ${jsonStr(r.message)}, """ +

@@ -3,6 +3,7 @@ package graft.runtime
 import graft.dq.{DataQualityRunner, SchemaValidation}
 import graft.functions.GuidV5
 import graft.model._
+import graft.obs.Obs
 import graft.script.RowScripts
 import graft.sinks.{JdbcSink, ObjectStoreSink}
 import graft.sources.FileSources
@@ -66,13 +67,13 @@ object Pipeline {
       Files.copy(src, destDir.resolve(name),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       info("end", s"Unstructured file landed as $name")
-      events.publish(events.Notification(spec.name, token, "objectStore",
+      events.publish(EventBus.Notification(spec.name, token, "objectStore",
         os.database, os.table, destDir.resolve(name).toString))
       return Result(token, spec.name, None, 1L, 0L, 0L)
     }
 
     // ---- read -------------------------------------------------------------
-    val raw = FileSources.read(spark, spec, inputPath)
+    val raw = Obs.span("read")(FileSources.read(spark, spec, inputPath))
     // DQ, dedup accounting, and the sink each walk the data; cache the input
     // once so the SOURCE is scanned once per run — at 100 TB every extra
     // bookkeeping action would otherwise be a full re-read
@@ -80,10 +81,14 @@ object Pipeline {
       spec.transformation.exists(_.deduplicate)
     if (multiPass) raw.persist()
     var out: Option[DataFrame] = None
+    // one status process and one profiling span per step
+    def step[T](process: String)(body: => T): T = {
+      status.overrideProcessName(process)
+      Obs.span(process)(body)
+    }
     try {
       // ---- data quality ---------------------------------------------------
-      val dqWarnings = spec.dataQuality.map { dq =>
-        status.overrideProcessName("DataQuality")
+      val dqWarnings = spec.dataQuality.map(dq => step("DataQuality") {
         info("processing", "Running data quality")
         if (dq.validateFileHeader && spec.source.file.exists(_.csv.exists(_.header)))
           DataQualityRunner.validateHeader(raw, spec)
@@ -91,19 +96,18 @@ object Pipeline {
           validatePayloads(raw, spec, loadScript(schemaPath)))
         val violations = DataQualityRunner.columnRuleViolations(raw, spec)
           .unionByName(DataQualityRunner.rowRuleViolations(raw, spec, loadScript))
-        val (_, warnings) = DataQualityRunner.enforce(violations, spec.name)
+        val (_, warnings) = DataQualityRunner.enforce(violations)
         if (warnings > 0)
           status.warn(token, spec.name, "processing",
             s"$warnings warning(s) occurred while processing this dataset")
         warnings
-      }.getOrElse(0L)
+      }).getOrElse(0L)
 
       // ---- transformation -------------------------------------------------
-      status.overrideProcessName("Transformation")
       var df = raw
       var dedupRemoved = 0L
-      spec.transformation.foreach { t =>
-        if (t.deduplicate) {
+      step("Transformation")(spec.transformation.foreach { t =>
+        if (t.deduplicate) Obs.span("dedup") {
           // dedup on the PRE-CAST representation (reference dedups raw string
           // rows, Transformation.scala:57-69) — `1.0` and `1.00` stay
           // distinct. One aggregation pass computes total and distinct
@@ -130,47 +134,49 @@ object Pipeline {
             df = RowScripts.transform(df, loadScript(path), spec.source.schema,
               spec.destination.schema, pipelineTs)
           }
-      }
+      })
 
       // ---- destination cast + sinks ----------------------------------------
-      status.overrideProcessName("Load")
-      val castDf = FileSources.applyDestinationSchema(df, spec.destination.schema,
-        spec.decimalCompat)
-      // split assignment rides AFTER the cast so the configured id field is
-      // addressed by its destination name; the appended bucket/split columns
-      // extend the destination schema (partitionBy("split") → per-split dirs)
-      val outDf = spec.transformation.flatMap(_.split) match {
-        case Some(sp) =>
-          if (!castDf.columns.contains(sp.idField))
-            throw new PipelineSpecException(
-              s"split.idField '${sp.idField}' is not a destination column " +
-                s"of dataset ${spec.name}")
-          info("processing", s"Assigning train/val/test split on ${sp.idField}")
-          graft.operators.DatasetSplit.assign(castDf, sp.idField, sp.trainPm, sp.valPm)
-        case None => castDf
-      }
-      val anySink = spec.destination.objectStore.nonEmpty ||
-        spec.destination.database.nonEmpty
-      // the sink write materializes the cache; rowsWritten then reads it
-      // back instead of re-running the pipeline or re-scanning the table
-      if (anySink) outDf.persist()
-      out = Some(outDf)
-      var table: Option[String] = None
-      var rows = 0L
-      spec.destination.objectStore.foreach { os =>
-        info("processing", s"Writing to object store table ${os.database}.${os.table}")
-        val fq = ObjectStoreSink.write(spark, outDf, os)
-        table = Some(fq)
-        rows = outDf.count()
-        events.publish(events.Notification(spec.name, token, "objectStore",
-          os.database, os.table, Paths.get(os.path, os.database, os.table).toString))
-      }
-      spec.destination.database.foreach { db =>
-        info("processing", s"Writing to JDBC table ${db.table}")
-        JdbcSink.write(outDf, db)
-        if (table.isEmpty) rows = outDf.count()
-        events.publish(events.Notification(spec.name, token, "database",
-          "", db.table, db.url))
+      val (table, rows) = step("Load") {
+        val castDf = FileSources.applyDestinationSchema(df, spec.destination.schema,
+          spec.decimalCompat)
+        // split assignment rides AFTER the cast so the configured id field is
+        // addressed by its destination name; the appended bucket/split columns
+        // extend the destination schema (partitionBy("split") → per-split dirs)
+        val outDf = spec.transformation.flatMap(_.split) match {
+          case Some(sp) =>
+            if (!castDf.columns.contains(sp.idField))
+              throw new PipelineSpecException(
+                s"split.idField '${sp.idField}' is not a destination column " +
+                  s"of dataset ${spec.name}")
+            info("processing", s"Assigning train/val/test split on ${sp.idField}")
+            graft.operators.DatasetSplit.assign(castDf, sp.idField, sp.trainPm, sp.valPm)
+          case None => castDf
+        }
+        val anySink = spec.destination.objectStore.nonEmpty ||
+          spec.destination.database.nonEmpty
+        // the sink write materializes the cache; rowsWritten then reads it
+        // back instead of re-running the pipeline or re-scanning the table
+        if (anySink) outDf.persist()
+        out = Some(outDf)
+        var table: Option[String] = None
+        var rows = 0L
+        spec.destination.objectStore.foreach { os =>
+          info("processing", s"Writing to object store table ${os.database}.${os.table}")
+          val fq = ObjectStoreSink.write(spark, outDf, os)
+          table = Some(fq)
+          rows = outDf.count()
+          events.publish(EventBus.Notification(spec.name, token, "objectStore",
+            os.database, os.table, Paths.get(os.path, os.database, os.table).toString))
+        }
+        spec.destination.database.foreach { db =>
+          info("processing", s"Writing to JDBC table ${db.table}")
+          JdbcSink.write(outDf, db)
+          if (table.isEmpty) rows = outDf.count()
+          events.publish(EventBus.Notification(spec.name, token, "database",
+            "", db.table, db.url))
+        }
+        (table, rows)
       }
 
       status.overrideProcessName("Pipeline")

@@ -25,8 +25,7 @@ final class PullRunner(
     spark: SparkSession,
     specs: Map[String, PipelineSpec],
     store: WatermarkStore) {
-
-  final case class PullOutcome(dataset: String, rows: Long, table: Option[String])
+  import PullRunner.PullOutcome
 
   private val lastRuns = mutable.Map.empty[String, ZonedDateTime]
 
@@ -54,7 +53,7 @@ final class PullRunner(
             // tick re-pulls the same window (at-least-once, never loss)
             pulled.commit(store, name)
             table.foreach { fq =>
-              Pipeline.events.publish(Pipeline.events.Notification(
+              Pipeline.events.publish(EventBus.Notification(
                 name, "", "objectStore",
                 spec.destination.objectStore.get.database,
                 spec.destination.objectStore.get.table, fq))
@@ -64,4 +63,8 @@ final class PullRunner(
         }
       }
     }
+}
+
+object PullRunner {
+  final case class PullOutcome(dataset: String, rows: Long, table: Option[String])
 }

@@ -10,15 +10,7 @@ import scala.collection.mutable
   * reference's DynamoDB status table.
   */
 final class StatusStore(maxRetained: Int = 200000) {
-
-  final case class StatusRow(
-      pipelineToken: String,
-      dataset: String,
-      processName: String,
-      step: String, // begin | processing | end | error
-      level: String, // info | warn | error
-      message: String,
-      ts: Instant)
+  import StatusStore.StatusRow
 
   private val rows = mutable.ArrayBuffer.empty[StatusRow]
   private var process = "Pipeline"
@@ -54,4 +46,15 @@ final class StatusStore(maxRetained: Int = 200000) {
         r.level, r.message, r.ts.toString))
     }.toDF("pipeline_token", "dataset", "process_name", "step", "level", "message", "ts")
   }
+}
+
+object StatusStore {
+  final case class StatusRow(
+      pipelineToken: String,
+      dataset: String,
+      processName: String,
+      step: String, // begin | processing | end | error
+      level: String, // info | warn | error
+      message: String,
+      ts: Instant)
 }

@@ -24,9 +24,7 @@ final class Watcher(
     specs: Map[String, PipelineSpec],
     ledgerPath: Path,
     maxRetries: Int = 3) {
-
-  final case class Processed(file: String, dataset: String,
-      result: Either[Throwable, Pipeline.Result])
+  import Watcher.Processed
 
   /** Ledger replay: one line per event — `name` = success, `name\tfail` =
     * one failed attempt. A success is terminal; failures accumulate until
@@ -89,4 +87,9 @@ final class Watcher(
       Processed(name, outcome.toOption.map(_.dataset).getOrElse("?"), outcome)
     }
   }
+}
+
+object Watcher {
+  final case class Processed(file: String, dataset: String,
+      result: Either[Throwable, Pipeline.Result])
 }

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.model.{ObjectStoreSpec, PipelineSpecException}
+import graft.obs.Obs
 import graft.operators.MergeUpsert
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
@@ -53,21 +54,6 @@ object ObjectStoreSink {
     * serialization is the ACID table format's job — the same seam where
     * Iceberg/Delta replace the versioned-dir commit.
     */
-  /** Opt-in commit-phase timing (`-Dgraft.commit.timing=true`): per-phase
-    * stderr lines for perf triage of the commit machinery. Zero cost when
-    * off (a static boolean guard).
-    */
-  private val commitTiming: Boolean =
-    java.lang.Boolean.getBoolean("graft.commit.timing")
-  @inline private[graft] def timed[T](what: => String)(body: => T): T =
-    if (!commitTiming) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally System.err.println(
-        f"[commit] $what: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
-
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def lockObj(tableDir: Path): Object = {
@@ -110,13 +96,13 @@ object ObjectStoreSink {
       }
 
       val exists = spark.catalog.tableExists(fq)
-      if (spec.keyFields.nonEmpty && exists) mergeInto(spark, df, spec, fq, tableDir)
-      else plainWrite(spark, df, spec, fq, tableDir, exists)
+      if (spec.keyFields.nonEmpty && exists) mergeInto(spark, df, spec, fq)
+      else plainWrite(spark, df, spec, fq, exists)
       fq
     }
 
   private def plainWrite(spark: SparkSession, df: DataFrame, spec: ObjectStoreSpec,
-      fq: String, tableDir: Path, exists: Boolean): Unit = {
+      fq: String, exists: Boolean): Unit = {
     val mode = spec.writeMode.toLowerCase match {
       case "overwrite" => SaveMode.Overwrite
       case "append" | "" => SaveMode.Append
@@ -214,7 +200,7 @@ object ObjectStoreSink {
     * staging dir (plain parquet has no transactional overwrite-while-read).
     */
   private def mergeInto(spark: SparkSession, batch: DataFrame, spec: ObjectStoreSpec,
-      fq: String, tableDir: Path): Unit = {
+      fq: String): Unit = {
     val target = spark.table(fq)
     // align batch to the table schema (by name, cast to table types)
     val aligned = batch.select(target.schema.fields.map(f =>
@@ -267,7 +253,7 @@ object ObjectStoreSink {
         .options(versionDirWriteOptions)
       val sw = if (spec.partitionBy.nonEmpty) sw0.partitionBy(spec.partitionBy: _*) else sw0
       // materialize BEFORE touching the live table
-      timed(s"replaceTable($fq) save")(sw.save(next.toString))
+      Obs.span("replaceTable.save")(sw.save(next.toString))
       // an EMPTY partitioned image writes no data files at all, so the
       // version dir is schema-less on disk (TRUNCATE, whole-table DELETE,
       // a delete matching every row). Persist the schema as a sidecar and
@@ -275,7 +261,7 @@ object ObjectStoreSink {
       // table shape. Written BEFORE the manifest: the commit contract
       // (manifest-last) keeps a crash in between invisible.
       val emptyImage = TableManifest.dataFiles(next).isEmpty
-      val reread = timed(s"replaceTable($fq) reread")(
+      val reread = Obs.span("replaceTable.reread")(
         if (!emptyImage) spark.read.format(spec.fileFormat).load(next.toString)
         else {
           val shape = partitionsLast(df, spec).schema
@@ -285,7 +271,7 @@ object ObjectStoreSink {
       // the manifest IS the commit: one atomic publish after every data file
       // is fully written — a version dir without it is an uncommitted crash
       // leftover, invisible to recovery/vacuum (TableManifest protocol)
-      val manifest0 = timed(s"replaceTable($fq) manifest")(
+      val manifest0 = Obs.span("replaceTable.manifest")(
         TableManifest.commit(next, schemaHash(reread), spec.fileFormat, txn))
       val sumCols = spec.sumColumns.filterNot(spec.partitionBy.contains)
       val bloomCols = spec.bloomColumns.filterNot(spec.partitionBy.contains)
@@ -297,33 +283,31 @@ object ObjectStoreSink {
       // over the fresh files computing the sum and Bloom aggregates
       // together (guide §1.2: remove whole passes before tuning inside
       // them) — the publish order above is unchanged, only the scan fuses.
-      val manifest =
-        if (sumCols.nonEmpty && bloomCols.nonEmpty && manifest0.files.nonEmpty)
-          timed(s"replaceTable($fq) sums+blooms")(
-            fusedEnrich(spark, next, spec.fileFormat, sumCols, bloomCols,
-              manifest0))
-        else {
-          val m1 =
-            if (sumCols.nonEmpty)
-              timed(s"replaceTable($fq) sums")(
-                TableManifest.enrichSums(spark, next, spec.fileFormat,
-                  sumCols, manifest0))
-            else manifest0
-          if (bloomCols.nonEmpty)
-            timed(s"replaceTable($fq) blooms")(
-              BloomIndex.build(spark, next, spec.fileFormat, bloomCols, m1))
-          m1
-        }
+      if (sumCols.nonEmpty && bloomCols.nonEmpty && manifest0.files.nonEmpty)
+        Obs.span("replaceTable.sums+blooms")(
+          fusedEnrich(spark, next, spec.fileFormat, sumCols, bloomCols,
+            manifest0)): Unit
+      else {
+        val m1 =
+          if (sumCols.nonEmpty)
+            Obs.span("replaceTable.sums")(
+              TableManifest.enrichSums(spark, next, spec.fileFormat,
+                sumCols, manifest0))
+          else manifest0
+        if (bloomCols.nonEmpty)
+          Obs.span("replaceTable.blooms")(
+            BloomIndex.build(spark, next, spec.fileFormat, bloomCols, m1))
+      }
       // ...and the table-root commit log records the version, so "latest
       // committed" never depends on directory-listing order/completeness
       CommitLog.record(tableDir, versionNumber(next))
-      timed(s"replaceTable($fq) repoint")(
+      Obs.span("replaceTable.repoint")(
         repoint(spark, fq, spec, next, reread))
       // stamp the versions this commit just replaced: retirement grace
       // measures from the supersede TIME, not the dir's write mtime
       versionDirs(tableDir).filter(_ != next).filter(TableManifest.isCommitted)
         .foreach(TableManifest.markSuperseded)
-      timed(s"replaceTable($fq) retire")(retireOldVersions(tableDir, keep = 2))
+      Obs.span("replaceTable.retire")(retireOldVersions(tableDir, keep = 2))
       fq
     }
 
@@ -342,7 +326,7 @@ object ObjectStoreSink {
     import org.apache.spark.sql.functions.input_file_name
     val df = spark.read.format(fileFormat).load(versionDir.toString)
     val sp = TableManifest.planSums(df, sumCols,
-      TableManifest.sumTargets(versionDir, m, onlyRel = None))
+      TableManifest.sumTargets(m, onlyRel = None))
     val bp = BloomIndex.planBuild(df, versionDir, bloomCols, m)
     (sp, bp) match {
       case (Some(s), Some(b)) =>
@@ -918,7 +902,7 @@ object ObjectStoreSink {
         .mode(SaveMode.Overwrite).format(spec.fileFormat)
         .options(versionDirWriteOptions)
       val sw = if (spec.partitionBy.nonEmpty) sw0.partitionBy(spec.partitionBy: _*) else sw0
-      timed(s"linkCommit($fq) save")(sw.save(next.toString))
+      Obs.span("linkCommit.save")(sw.save(next.toString))
     }
 
     // carry every wanted prior data file at its own LOGICAL relative path.
@@ -963,8 +947,7 @@ object ObjectStoreSink {
       // tasks touch the same target, and a name collision is only ever
       // against an already-written FRESH file (the save job completed
       // before this loop). Results keep `wanted` order — the manifest is
-      // byte-deterministic regardless of completion order; ANY failure
-      // degrades to the full rewrite exactly like the sequential form.
+      // byte-deterministic regardless of completion order.
       def linkOne(e: TableManifest.FileEntry)
           : Option[TableManifest.FileEntry] = {
         val src = TableManifest.resolved(prevDir, e)
@@ -992,25 +975,12 @@ object ObjectStoreSink {
           Some(e.copy(path = rel, ref = ""))
         }
       }
-      // both paths degrade identically: ANY exception (not just the I/O
-      // fallbacks linkOne catches itself — e.g. createDirectories failing
-      // on permissions) becomes None → clean fullRewrite degrade, never a
-      // propagated throw that leaves the uncommitted next dir behind
-      val results: Seq[Option[TableManifest.FileEntry]] =
-        if (wanted.size <= 2)
-          wanted.map(e => try linkOne(e) catch { case _: Exception => None })
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(wanted.size, 16))
-          try {
-            import scala.jdk.CollectionConverters._
-            pool.invokeAll(wanted.map(e =>
-              new java.util.concurrent.Callable[
-                Option[TableManifest.FileEntry]] {
-                def call() = try linkOne(e) catch { case _: Exception => None }
-              }).asJava).asScala.toSeq.map(_.get)
-          } finally pool.shutdown()
-        }
+      // ANY exception (not just the I/O fallbacks linkOne catches itself —
+      // e.g. createDirectories failing on permissions) becomes None → clean
+      // fullRewrite degrade, never a propagated throw that leaves the
+      // uncommitted next dir behind
+      val results = DriverPool.map(wanted)(e =>
+        try linkOne(e) catch { case _: Exception => None })
       if (results.exists(_.isEmpty)) intact = false
       else carried ++= results.flatten
     }
@@ -1039,7 +1009,7 @@ object ObjectStoreSink {
         spark.read.schema(prevRead.schema)
           .format(spec.fileFormat).load(next.toString)
     }
-    val manifest0 = timed(s"linkCommit($fq) manifest")(
+    val manifest0 = Obs.span("linkCommit.manifest")(
       TableManifest.commitCarried(next, schemaHash(reread),
         spec.fileFormat, txn, carriedEntries))
     // carried entries keep their recorded sums verbatim (same immutable
@@ -1060,12 +1030,12 @@ object ObjectStoreSink {
     val sumPlan =
       if (sumCols.isEmpty) None
       else freshDf.flatMap(df => TableManifest.planSums(df, sumCols,
-        TableManifest.sumTargets(next, manifest0, newOnly)))
+        TableManifest.sumTargets(manifest0, newOnly)))
     val extendPlan = BloomIndex.planExtend(prevDir, next, manifest0,
       carriedRel, freshDf)
     val manifest = (sumPlan, extendPlan) match {
       case (Some(s), Some(e)) if e.aggs.nonEmpty =>
-        timed(s"linkCommit($fq) sums+blooms") {
+        Obs.span("linkCommit.sums+blooms") {
           import org.apache.spark.sql.functions.input_file_name
           val aggs = s.aggs ++ e.aggs
           val rows = freshDf.get.groupBy(input_file_name().as("_file"))
@@ -1077,7 +1047,7 @@ object ObjectStoreSink {
         }
       case _ =>
         val m1 = sumPlan match {
-          case Some(s) => timed(s"linkCommit($fq) sums") {
+          case Some(s) => Obs.span("linkCommit.sums") {
             import org.apache.spark.sql.functions.input_file_name
             val rows = freshDf.get.groupBy(input_file_name().as("_file"))
               .agg(s.aggs.head, s.aggs.tail: _*).collect()
@@ -1085,7 +1055,7 @@ object ObjectStoreSink {
           }
           case None => manifest0
         }
-        timed(s"linkCommit($fq) blooms")(extendPlan.foreach { e =>
+        Obs.span("linkCommit.blooms")(extendPlan.foreach { e =>
           if (e.aggs.isEmpty)
             BloomIndex.publishExtended(next, e, Array.empty, offset = 0)
           else {
@@ -1098,11 +1068,11 @@ object ObjectStoreSink {
         m1
     }
     CommitLog.record(tableDir, versionNumber(next))
-    timed(s"linkCommit($fq) repoint")(
+    Obs.span("linkCommit.repoint")(
       repoint(spark, fq, spec, next, reread))
     versionDirs(tableDir).filter(_ != next).filter(TableManifest.isCommitted)
       .foreach(TableManifest.markSuperseded)
-    timed(s"linkCommit($fq) retire")(retireOldVersions(tableDir, keep = 2))
+    Obs.span("linkCommit.retire")(retireOldVersions(tableDir, keep = 2))
     LinkCommitReport(fq, carriedEntries.size,
       manifest.files.size - carriedEntries.size, degraded = false)
   }
@@ -1187,14 +1157,14 @@ object ObjectStoreSink {
           cat.dropPartitions(ident, stale.map(_.spec),
             ignoreIfNotExists = true, purge = false, retainData = true)
         spark.sql(s"MSCK REPAIR TABLE $fq SYNC PARTITIONS")
-        syncRefPartitions(spark, fq, spec, newLoc)
+        syncRefPartitions(spark, spec, newLoc)
       }
       spark.catalog.refreshTable(fq)
     } else {
       spark.sql(s"DROP TABLE IF EXISTS $fq")
       createExternal(spark, fq, spec, sample, newLoc)
       repairTable(spark, fq, spec)
-      if (spec.partitionBy.nonEmpty) syncRefPartitions(spark, fq, spec, newLoc)
+      if (spec.partitionBy.nonEmpty) syncRefPartitions(spark, spec, newLoc)
     }
   }
 
@@ -1207,8 +1177,8 @@ object ObjectStoreSink {
     * catalog scans keep their roots and [[graft.plans.RefResolveRule]]
     * resolves the files. Link-mode manifests have no references — no-op.
     */
-  private def syncRefPartitions(spark: SparkSession, fq: String,
-      spec: ObjectStoreSpec, newLoc: Path): Unit = {
+  private def syncRefPartitions(spark: SparkSession, spec: ObjectStoreSpec,
+      newLoc: Path): Unit = {
     if (spec.partitionBy.isEmpty) return
     val m = TableManifest.read(newLoc).getOrElse(return)
     if (!m.files.exists(_.ref.nonEmpty)) return

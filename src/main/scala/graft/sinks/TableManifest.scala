@@ -331,7 +331,7 @@ object TableManifest {
       fileFormat: String, columns: Seq[String], m: Manifest,
       onlyRel: Option[Set[String]] = None): Manifest = {
     import org.apache.spark.sql.functions.input_file_name
-    val targets = sumTargets(versionDir, m, onlyRel)
+    val targets = sumTargets(m, onlyRel)
     if (columns.isEmpty || targets.isEmpty) return m
     val paths = targets.map(e => resolved(versionDir, e).toString)
     val df = spark.read.format(fileFormat).load(paths: _*)
@@ -347,7 +347,7 @@ object TableManifest {
   /** The entries a sum pass targets: `onlyRel` (link commits — the fresh
     * files) or every entry.
     */
-  private[sinks] def sumTargets(versionDir: Path, m: Manifest,
+  private[sinks] def sumTargets(m: Manifest,
       onlyRel: Option[Set[String]]): Seq[FileEntry] = {
     if (m.files.isEmpty) return Nil
     val targetRels = onlyRel.getOrElse(m.files.map(_.path).toSet)
@@ -495,17 +495,11 @@ object TableManifest {
       return (if (fileFormat.equalsIgnoreCase("parquet")) 0L else -1L,
         Map.empty, Map.empty)
     val conf = new org.apache.hadoop.conf.Configuration()
-    // one footer read per file, fanned over a bounded driver pool: the
-    // reads are independent metadata I/O (open + footer parse), and a
-    // commit over a many-file version dir was paying them strictly
-    // sequentially (guide §5: driver-side single-threaded work reads as
-    // "nothing is running"). Results are keyed by relative path, so
-    // completion order cannot change the manifest; ANY failure degrades
-    // the whole commit exactly like the sequential form did.
-    // one unreadable footer degrades the WHOLE commit, so remaining reads
-    // are wasted I/O — short-circuit them (the old sequential loop returned
-    // on the first failure; the pool otherwise reads every remaining footer
-    // of a large mixed-content version dir before discovering the None)
+    // one footer read per file over the bounded driver pool: independent
+    // metadata I/O (open + footer parse). Results are keyed by relative
+    // path, so completion order cannot change the manifest. One unreadable
+    // footer degrades the WHOLE commit, so the first failure skips the
+    // reads not yet started.
     val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
     def readOne(p: Path): Option[(String, Long, Map[String, ColStats])] =
       if (failed.get) None
@@ -517,20 +511,7 @@ object TableManifest {
           footerColStats(r.getFooter)))
         finally r.close()
       } catch { case _: Exception => failed.set(true); None } // not parquet
-    val results: Seq[Option[(String, Long, Map[String, ColStats])]] =
-      if (files.size <= 2) files.map(readOne)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(files.size, 16))
-        try {
-          import scala.jdk.CollectionConverters._
-          pool.invokeAll(files.map(p =>
-            new java.util.concurrent.Callable[
-              Option[(String, Long, Map[String, ColStats])]] {
-              def call() = readOne(p)
-            }).asJava).asScala.toSeq.map(_.get)
-        } finally pool.shutdown()
-      }
+    val results = DriverPool.map(files)(readOne)
     if (results.exists(_.isEmpty)) return (-1L, Map.empty, Map.empty)
     val ok = results.flatten
     (ok.map(_._2).sum,

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.obs.Obs
 import graft.operators.IncrementalDedup
 import graft.operators.IncrementalDedup.DedupIndex
 
@@ -56,7 +57,12 @@ object DedupIndexStream {
     */
   def applyBatch(spark: SparkSession, batchDf: DataFrame, indexDir: String,
       pairsDir: String, threshold: Double, batchKey: String): Unit =
-    synchronized {
+    synchronized(Obs.span("dedupIndex.batch")(
+      applyLocked(spark, batchDf, indexDir, pairsDir, threshold, batchKey)))
+
+  private def applyLocked(spark: SparkSession, batchDf: DataFrame,
+      indexDir: String, pairsDir: String, threshold: Double,
+      batchKey: String): Unit = {
       require(!batchKey.startsWith("compact-"),
         "batch keys starting with 'compact-' are reserved for compactIndex")
       val batchDir = Paths.get(indexDir, "batches", batchKey)
@@ -115,9 +121,7 @@ object DedupIndexStream {
       // a crashed earlier attempt may have left uncommitted partial writes
       deleteTree(batchDir)
 
-      import graft.sinks.ObjectStoreSink.timed
-      val existing = timed(s"dse($batchKey) loadIndex")(
-        loadIndex(spark, indexDir))
+      val existing = Obs.span("loadIndex")(loadIndex(spark, indexDir))
       // PERSIST the ledger-filtered batch too: bands and hashes are built
       // from it as SEPARATE plans (buildIndex), so without this the
       // anti-join (and the dedup shuffle above it) would run once per kernel
@@ -132,28 +136,27 @@ object DedupIndexStream {
       batchIdx.counts.persist()
       try {
         // nothing fresh: no state to commit, replay re-derives the same
-        if (timed(s"dse($batchKey) counts.isEmpty")(batchIdx.counts.isEmpty))
+        if (Obs.span("counts.isEmpty")(batchIdx.counts.isEmpty))
           return
         val idx = existing.getOrElse(emptyIndex(batchIdx))
         val pairs = IncrementalDedup.newPairs(idx, batchIdx, threshold)
         pairs.persist()
         try {
-          if (timed(s"dse($batchKey) pairs.isEmpty")(!pairs.isEmpty))
-            timed(s"dse($batchKey) pairs.write")(
+          if (Obs.span("pairs.isEmpty")(!pairs.isEmpty))
+            Obs.span("pairs.write")(
               pairs.write.mode(SaveMode.Overwrite)
                 .parquet(s"$pairsDir/batch=$batchKey"))
         } finally pairs.unpersist(): Unit
-        timed(s"dse($batchKey) bands.write")(
+        Obs.span("bands.write")(
           batchIdx.bands.write.parquet(s"$batchDir/bands"))
-        timed(s"dse($batchKey) hashes.write")(
+        Obs.span("hashes.write")(
           batchIdx.hashes.write.parquet(s"$batchDir/hashes"))
-        timed(s"dse($batchKey) counts.write")(
+        Obs.span("counts.write")(
           batchIdx.counts.write.parquet(s"$batchDir/counts"))
         // the commit point; the marker records the batch's content
         // fingerprint so a post-compaction replay is distinguishable from
         // a reset checkpoint reusing the key name
-        timed(s"dse($batchKey) fingerprint")(
-          Files.writeString(marker, fpString(fpV2)))
+        Obs.span("fingerprint")(Files.writeString(marker, fpString(fpV2)))
         ()
       } finally {
         batchIdx.bands.unpersist(); batchIdx.hashes.unpersist()

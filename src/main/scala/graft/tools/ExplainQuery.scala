@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.SparkEntry
 
@@ -18,6 +18,19 @@ object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
+    val spark = session()
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled").toBoolean
+    names.foreach { n =>
+      println(s"\n================ $n @ $sfDir (AQE ${if (aqe) "on" else "off"}) ================")
+      query(n)(spark, sfDir).explain("formatted")
+    }
+    spark.stop()
+  }
+
+  /** The tools' session: `local[SPARK_GRAFT_CPUS]`, AQE unless
+    * `SPARK_GRAFT_AQE=off`, and the Bench/Verify extension surface.
+    */
+  private[tools] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "on") != "off"
     val spark = SparkSession.builder()
@@ -33,12 +46,10 @@ object ExplainQuery {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      val q = SparkEntry.queries.getOrElse(n,
-        sys.error(s"unknown query: $n (have ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")})"))
-      println(s"\n================ $n @ $sfDir (AQE ${if (aqe) "on" else "off"}) ================")
-      q(spark, sfDir).explain("formatted")
-    }
-    spark.stop()
+    spark
   }
+
+  private[tools] def query(name: String): (SparkSession, String) => DataFrame =
+    SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name " +
+      s"(have ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")})"))
 }

@@ -44,4 +44,11 @@ object GraftSqlBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** Block until every listener has seen every event posted so far
+    * (`listenerBus` is spark-private). Used by graft.obs.Obs to close a
+    * recording.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -1,6 +1,5 @@
 package graft
 
-import graft.queries.QueryDef
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -552,6 +551,4 @@ class PlanAuditSpec extends SparkSpec {
       }
     }
   }
-
-  private def allDefs: Seq[QueryDef] = Nil // (reserved for future sweeps)
 }

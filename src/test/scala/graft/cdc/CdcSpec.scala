@@ -3,7 +3,7 @@ package graft.cdc
 import graft.SparkSpec
 import graft.model.{JdbcSourceSpec, ObjectStoreSpec}
 import graft.streaming.CdcStream
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.time.{ZoneOffset, ZonedDateTime}
 
 class CdcSpec extends SparkSpec {

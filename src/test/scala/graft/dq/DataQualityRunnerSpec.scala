@@ -51,7 +51,7 @@ class DataQualityRunnerSpec extends SparkSpec {
     v.head.getBoolean(3) shouldBe false
     // warn-only rules don't abort
     val (e, w) = DataQualityRunner.enforce(
-      DataQualityRunner.columnRuleViolations(smallCsv(spec), spec), "stock_price")
+      DataQualityRunner.columnRuleViolations(smallCsv(spec), spec))
     e shouldBe 0L
     w shouldBe 1L
   }
@@ -60,7 +60,7 @@ class DataQualityRunnerSpec extends SparkSpec {
     val spec = dqSpec(errors = true)
     val ex = intercept[DataQualityRunner.DataQualityException] {
       DataQualityRunner.enforce(
-        DataQualityRunner.columnRuleViolations(smallCsv(spec), spec), "stock_price")
+        DataQualityRunner.columnRuleViolations(smallCsv(spec), spec))
     }
     ex.getMessage should include ("1 error(s)")
     // >100 errors: every volume cell violates an impossible pattern
@@ -70,7 +70,7 @@ class DataQualityRunnerSpec extends SparkSpec {
       "/root/repo/fixtures/stock_price.20170102.dataset.csv") // 6003 rows
     val ex2 = intercept[DataQualityRunner.DataQualityException] {
       DataQualityRunner.enforce(
-        DataQualityRunner.columnRuleViolations(big, bigSpec), "stock_price")
+        DataQualityRunner.columnRuleViolations(big, bigSpec))
     }
     ex2.getMessage should include ("more than 100")
   }

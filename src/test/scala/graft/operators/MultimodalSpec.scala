@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.{Encoders, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 class MultimodalSpec extends SparkSpec {

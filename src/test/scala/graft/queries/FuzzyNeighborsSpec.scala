@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Semantics of the sorted-neighborhood fuzzy-duplicate operator
   * (Dedup.fuzzyNeighborPairs) on controlled corpora: the bounded

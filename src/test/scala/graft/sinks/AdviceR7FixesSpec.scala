@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.CountDownLatch
 

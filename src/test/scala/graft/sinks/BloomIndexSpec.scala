@@ -5,7 +5,6 @@ import java.nio.file.Paths
 import graft.SparkSpec
 import graft.model.ObjectStoreSpec
 import graft.operators.JoinPrune
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-file bloom index: no false negatives ever (the soundness bar), real

@@ -2,7 +2,6 @@ package graft.sinks
 
 import graft.SparkSpec
 import graft.model.{ObjectStoreSpec, PipelineSpecException}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
